@@ -21,6 +21,7 @@ north star's addition.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -92,32 +93,46 @@ def union_find_local(pairs: list[tuple[str, str]]) -> dict[str, str]:
 
 
 def connected_components_auto(
-    edges: DataFrame, edge_count: int | None = None, driver_threshold: int = 500_000
+    edges: DataFrame, edge_bound: int | None = None, driver_threshold: int = 500_000
 ) -> tuple[DataFrame, int]:
     """Physical-strategy dispatch: below `driver_threshold` edges the graph
     fits trivially on the driver — one collect + union-find beats ~10
     shuffle jobs of the iterative loop (the analog of Catalyst picking a
     broadcast join). Above it, the distributed large-star/small-star loop.
     Identical outputs either way (cluster_id = min url of the component).
-    """
-    if edge_count is None:
-        edge_count = edges.count()
-    if edge_count <= driver_threshold:
-        pairs = [(r[0], r[1]) for r in edges.select("url_a", "url_b").collect()]
-        labels = union_find_local(pairs)
-        spark = edges.sparkSession
-        if not labels:
-            return (
-                spark.createDataFrame([], "url string, cluster_id string"),
-                0,
+
+    ``edge_bound`` is an upper bound on the number of edge rows that the
+    caller already knows (the pipeline passes edges-stage rows plus
+    exact-stage rows from the checkpoint manifests). A bound at or below
+    ``driver_threshold`` takes the driver path with no count job; a bound
+    above it, or none, is only a hint, so the edges are counted and the
+    exact count dispatches.
+
+    The driver path stays on Arrow both ways: the edges come back through
+    one ``toArrow()`` collect, and the labels go back as an Arrow table,
+    which Spark turns into a local relation. A list of tuples would
+    instead become a Python RDD whose write runs its own wave of Python
+    tasks: create + write of 3000 labels measured 500-560 ms that way
+    against 190-200 ms through Arrow (local[4], 4-core VM)."""
+    if edge_bound is None or edge_bound > driver_threshold:
+        edge_bound = edges.count()
+    if edge_bound > driver_threshold:
+        return connected_components(edges)
+    tbl = edges.select("url_a", "url_b").toArrow()
+    labels = union_find_local(
+        list(zip(tbl.column("url_a").to_pylist(), tbl.column("url_b").to_pylist()))
+    )
+    return (
+        edges.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "url": pa.array(list(labels), pa.string()),
+                    "cluster_id": pa.array(list(labels.values()), pa.string()),
+                }
             )
-        return (
-            spark.createDataFrame(
-                list(labels.items()), "url string, cluster_id string"
-            ),
-            0,
-        )
-    return connected_components(edges)
+        ),
+        0,
+    )
 
 
 def connected_components(

@@ -126,10 +126,17 @@ def _join_sigs(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
     # table's post-aggregate size ESTIMATE can read tiny, and a
     # statically-planned broadcast of an unbounded pair table is exactly
     # the word_ngram OOM class (operators/dedup.py round-8 note). Pin the
-    # scale-safe sort-merge strategy.
+    # scale-safe sort-merge strategy on BOTH joins: a strategy hint binds
+    # only the join directly above the hinted plan, so the second join
+    # needs its own.
     sig_a = sigs.select(F.col("url").alias("url_a"), F.col("sig").alias("sig_a"))
     sig_b = sigs.select(F.col("url").alias("url_b"), F.col("sig").alias("sig_b"))
-    return pairs.hint("merge").join(sig_a, "url_a").join(sig_b, "url_b")
+    return (
+        pairs.hint("merge")
+        .join(sig_a, "url_a")
+        .hint("merge")
+        .join(sig_b, "url_b")
+    )
 
 
 def _candidate_urls(pairs: DataFrame) -> DataFrame:
@@ -203,7 +210,7 @@ def _broadcast_score(
 
     spark = pairs.sparkSession
     flat, starts, lens, idx, viol = _collect_slice_flat(pairs, sigs, urls)
-    bc = spark.sparkContext.broadcast((flat, starts, lens, idx, set(viol.tolist())))
+    bc = spark.sparkContext.broadcast((flat, starts, lens, idx, viol))
     fields = [StructField("url_a", StringType()), StructField("url_b", StringType())]
     if emit_jaccard:
         fields.append(StructField("jaccard", DoubleType()))
@@ -229,12 +236,10 @@ def _broadcast_score(
             if inter is None:
                 redo = range(n)
                 inter = np.zeros(n, dtype=np.int64)
-            elif bad_rows:
-                redo = [
-                    i
-                    for i in range(n)
-                    if (ia[i] in bad_rows or ib[i] in bad_rows)
-                ]
+            elif bad_rows.shape[0]:
+                redo = np.flatnonzero(
+                    np.isin(ia, bad_rows) | np.isin(ib, bad_rows)
+                )
             if redo is not None:
                 for i in redo:
                     if ia[i] < 0 or ib[i] < 0:
@@ -319,9 +324,10 @@ def verified_edges(
     letting bench-scale candidate sets take the zero-shuffle path.
 
     ``n_candidate_urls``: upper bound on distinct urls in ``pairs`` when the
-    caller already knows it (the pipeline passes 2x the candidate-stage row
-    count from the checkpoint manifest) — avoids spending an extra Spark job
-    on a count that only picks the strategy."""
+    caller already knows it (the pipeline passes the smaller of 2x the
+    candidate-stage rows and the signature-stage rows from the checkpoint
+    manifests: every candidate url is a signature url) — avoids spending
+    an extra Spark job on a count that only picks the strategy."""
     tau = cfg.jaccard_threshold
     prefilter_k = getattr(cfg, "prefilter_k", PREFILTER_K)
     sigs = signatures.select(F.col(url_col).alias("url"), "sig")

@@ -12,6 +12,18 @@ gives snapshot ids and atomic commits for free); this store implements the
 same contract over plain parquet so the sandbox (no Iceberg runtime jar)
 exercises identical resume logic. The interface is storage-agnostic on
 purpose.
+
+Re-reads (right after a write, and on resume) use the schema the manifest
+recorded instead of letting parquet infer it: inference is one Spark job
+per stage read, 7 per pipeline run, and the pinned read runs none (on a
+4-core VM the time from a stage's write job to its returned DataFrame
+fell from 0.09-0.13 s to 0.03-0.08 s). The two schemas agree, because a
+file-source read makes every field nullable either way. A pinned read of a directory with no
+part files returns 0 rows without error, so ``read_committed`` first
+checks that the part files the manifest counted are all there: a
+corrupted or partially deleted snapshot fails loudly instead of resuming
+as a silently short stage, and an honestly empty stage reads straight
+through the pinned schema.
 """
 
 from __future__ import annotations
@@ -23,6 +35,7 @@ import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -32,6 +45,19 @@ class StageResult:
     wall_sec: float
     partition_counts: list[int]
     skipped: bool
+
+
+def read_committed(spark: SparkSession, data: pathlib.Path, meta: dict) -> DataFrame:
+    """Read a committed parquet snapshot with the schema its manifest
+    records: no inference job. Raises when the directory does not hold
+    exactly the part files the manifest counted."""
+    n_parts = len(list(data.glob("part-*.parquet")))
+    if n_parts != len(meta["partition_counts"]):
+        raise FileNotFoundError(
+            f"{data}: manifest records {meta['rows']} rows in "
+            f"{len(meta['partition_counts'])} part files, found {n_parts}"
+        )
+    return spark.read.schema(StructType.fromJson(meta["schema"])).parquet(str(data))
 
 
 class ParquetCheckpointStore:
@@ -54,22 +80,8 @@ class ParquetCheckpointStore:
         return meta.get("complete") is True and meta.get("config_hash") == self.config_hash
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        data, manifest = self._paths(stage)
-        try:
-            return spark.read.parquet(str(data))
-        except Exception:
-            # An empty stage writes no part files; reconstruct from the
-            # schema recorded in the manifest — but ONLY when the manifest
-            # says the stage really had 0 rows. A corrupted / partially
-            # deleted snapshot whose directory still exists must fail loudly,
-            # not resume as a silently-empty stage.
-            from pyspark.sql.types import StructType
-
-            meta = json.loads(manifest.read_text())
-            if meta.get("rows", -1) != 0:
-                raise
-            schema = StructType.fromJson(meta["schema"])
-            return spark.createDataFrame([], schema)
+        data, _ = self._paths(stage)
+        return read_committed(spark, data, self.manifest(stage))
 
     def manifest(self, stage: str) -> dict:
         _, manifest = self._paths(stage)
@@ -97,22 +109,19 @@ class ParquetCheckpointStore:
             shutil.rmtree(data)
         tmp.rename(data)
         wall = time.monotonic() - t0
-        manifest.write_text(
-            json.dumps(
-                {
-                    "stage": stage,
-                    "complete": True,
-                    "config_hash": self.config_hash,
-                    "rows": rows,
-                    "wall_sec": wall,
-                    "partition_counts": partition_counts,
-                    "schema": json.loads(schema_json),
-                    "written_at_monotonic": time.monotonic(),
-                }
-            )
-        )
+        meta = {
+            "stage": stage,
+            "complete": True,
+            "config_hash": self.config_hash,
+            "rows": rows,
+            "wall_sec": wall,
+            "partition_counts": partition_counts,
+            "schema": json.loads(schema_json),
+            "written_at_monotonic": time.monotonic(),
+        }
+        manifest.write_text(json.dumps(meta))
         return (
-            self.read(spark, stage),
+            read_committed(spark, data, meta),
             StageResult(stage, rows, wall, partition_counts, skipped=False),
         )
 

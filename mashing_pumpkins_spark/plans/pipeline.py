@@ -142,10 +142,12 @@ def run_pipeline(
             raise ValueError("run_pipeline needs checkpoint_dir or store")
         store = ParquetCheckpointStore(checkpoint_dir, cfg.config_hash())
     report = RunReport()
+    rows: dict[str, int] = {}
 
     def stage(name: str, compute) -> DataFrame:
         df, res = store.get_or_compute(spark, name, compute)
         report.stages.append(res)
+        rows[name] = res.rows
         return df
 
     docs = stage("extract", lambda: extract(pages, cfg))
@@ -176,13 +178,19 @@ def run_pipeline(
         return pairs
 
     pairs = stage("candidates", _candidates)
-    # the candidates stage row count is already in the manifest — hand the
-    # verify dispatch its url bound instead of spending a count job
-    n_pair_rows = report.stages[-1].rows
+    # Row counts already in the manifests bound what the dispatches below
+    # would otherwise count with a Spark job. Every candidate url is a
+    # signature url, so the distinct url count is at most the smaller of
+    # 2 x candidate pairs and signature rows; the exact stage holds one
+    # row per representative plus one per exact edge, so its rows bound
+    # the exact edges.
     near_edges = stage(
         "edges",
         lambda: verified_edges(
-            pairs, signatures, cfg, n_candidate_urls=2 * n_pair_rows
+            pairs,
+            signatures,
+            cfg,
+            n_candidate_urls=min(2 * rows["candidates"], rows["signatures"]),
         ),
     )
     all_edges = near_edges.select("url_a", "url_b").union(
@@ -190,7 +198,9 @@ def run_pipeline(
     )
 
     def _cluster():
-        clusters, iters = connected_components_auto(all_edges)
+        clusters, iters = connected_components_auto(
+            all_edges, edge_bound=rows["edges"] + rows["exact"]
+        )
         report.cc_iterations = iters
         return clusters
 
@@ -250,10 +260,19 @@ def _sketch_stage(reps: DataFrame, cfg: PipelineConfig) -> DataFrame:
     Partitioning: parquet re-reads plan splits by BYTES (maxPartitionBytes
     file packing), but the sketch UDF is CPU-bound per byte — a checkpoint
     snapshot that packs into fewer splits than cores would underparallelize
-    the most expensive stage. Repartition up only when that happens; at
-    production scale snapshots have thousands of splits and this is a
-    no-op (split planning only, no job)."""
-    par = reps.sparkSession.sparkContext.defaultParallelism * 2
+    the most expensive stage. Repartition up only when that happens, and
+    only to one task per core: one wave of Python tasks. Each Python task
+    pays a fixed start-up cost before the UDF runs (about 0.25-0.3 s on a
+    4-core VM: the worker calls importlib.invalidate_caches() per task,
+    which re-reads the pyspark.zip directory once per zipimporter). An
+    identity mapInArrow over 4000 rows measured 279 / 341 / 607 / 1187 ms
+    at 1 / 4 / 8 / 16 partitions on local[4], against 48-68 ms for the
+    same job without Python, so a second wave at small inputs costs more
+    than the balance it buys; fewer sketch tasks also leave fewer
+    signature part files for the bands stage to read. At production scale
+    snapshots have thousands of splits and this is a no-op (split
+    planning only, no job)."""
+    par = reps.sparkSession.sparkContext.defaultParallelism
     if reps.rdd.getNumPartitions() < par:
         reps = reps.repartition(par)
     if cfg.shard_chunk_bytes > 0:

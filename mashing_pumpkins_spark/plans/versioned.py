@@ -29,7 +29,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .checkpoint import StageResult
+from .checkpoint import StageResult, read_committed
 
 
 class VersionedDirCheckpointStore:
@@ -90,15 +90,7 @@ class VersionedDirCheckpointStore:
         rec = dict(self._commits(stage)).get(version)
         if rec is None:
             raise FileNotFoundError(f"stage {stage!r} has no committed v{version}")
-        data = self._data_dir(stage, version)
-        try:
-            return spark.read.parquet(str(data))
-        except Exception:
-            from pyspark.sql.types import StructType
-
-            if rec.get("rows", -1) != 0:
-                raise
-            return spark.createDataFrame([], StructType.fromJson(rec["schema"]))
+        return read_committed(spark, self._data_dir(stage, version), rec)
 
     def versions(self, stage: str) -> list[int]:
         """All committed versions (any config hash), ascending."""

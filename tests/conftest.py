@@ -18,3 +18,26 @@ def spark():
     )
     yield session
     session.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` under a fresh Spark job group and
+    returns ``(result, number of Spark jobs fn launched)``. The listener
+    bus is drained first so that no job start is still in flight."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

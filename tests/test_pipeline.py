@@ -13,7 +13,9 @@ from mashing_pumpkins_spark.functions.sketch_np import signature
 from mashing_pumpkins_spark.operators.connected_components import (
     connected_components,
     connected_components_auto,
+    union_find_local,
 )
+from mashing_pumpkins_spark.plans.checkpoint import ParquetCheckpointStore
 from mashing_pumpkins_spark.plans.pipeline import run_pipeline, run_pipeline_flow
 from mashing_pumpkins_spark.sources.synthetic import generate_pages
 
@@ -91,6 +93,69 @@ def test_cc_driver_and_distributed_strategies_agree(spark):
     d1 = {r["url"]: r["cluster_id"] for r in via_driver.collect()}
     d2 = {r["url"]: r["cluster_id"] for r in via_dist.collect()}
     assert d1 == d2
+
+
+def _labels(clusters) -> dict[str, str]:
+    return {r["url"]: r["cluster_id"] for r in clusters.collect()}
+
+
+def _random_edges(n_edges: int, n_nodes: int, seed: int) -> list[tuple[str, str]]:
+    import random
+
+    rng = random.Random(seed)
+    edges = [
+        (f"n{rng.randrange(n_nodes):04d}", f"n{rng.randrange(n_nodes):04d}")
+        for _ in range(n_edges)
+    ]
+    return [(a, b) for a, b in edges if a != b]
+
+
+@pytest.mark.parametrize("n_edges", [0, 200], ids=["empty", "random"])
+def test_cc_arrow_driver_path_matches_distributed_and_union_find(spark, n_edges):
+    edges = _random_edges(n_edges, 400, seed=11)
+    df = spark.createDataFrame(edges, "url_a string, url_b string")
+    via_driver, iters = connected_components_auto(df, edge_bound=len(edges))
+    via_dist, _ = connected_components(df)
+    assert iters == 0
+    assert via_driver.dtypes == [("url", "string"), ("cluster_id", "string")]
+    got = _labels(via_driver)
+    assert got == _labels(via_dist) == union_find_local(edges)
+    if n_edges:
+        assert len(set(got.values())) > 1  # several components, not one blob
+
+
+def test_cc_edge_bound_skips_the_count_job(spark, spark_jobs, monkeypatch):
+    """A bound at or below driver_threshold goes straight to the driver
+    path; a bound above it, or none, counts first and dispatches on the
+    count, as connected_components_auto always did."""
+    edges = _random_edges(120, 60, seed=5)
+    df = spark.createDataFrame(edges, "url_a string, url_b string")
+    expected = union_find_local(edges)
+    counts = []
+    count = type(df).count
+    monkeypatch.setattr(
+        type(df), "count", lambda self: counts.append(1) or count(self)
+    )
+
+    (clusters, iters), n_bound = spark_jobs(
+        lambda: connected_components_auto(df, edge_bound=len(edges))
+    )
+    assert counts == [] and iters == 0 and _labels(clusters) == expected
+
+    (clusters, iters), n_none = spark_jobs(lambda: connected_components_auto(df))
+    assert len(counts) == 1 and iters == 0 and _labels(clusters) == expected
+    assert n_bound < n_none
+
+    (clusters, iters), n_hint = spark_jobs(
+        lambda: connected_components_auto(df, edge_bound=10**9)
+    )
+    assert len(counts) == 2 and iters == 0 and _labels(clusters) == expected
+    assert n_hint == n_none
+
+    clusters, iters = connected_components_auto(
+        df, edge_bound=10**9, driver_threshold=len(edges) - 1
+    )
+    assert len(counts) == 3 and iters >= 1 and _labels(clusters) == expected
 
 
 @pytest.fixture(scope="module")
@@ -254,6 +319,65 @@ def test_checkpoint_read_fails_on_corrupted_nonempty_stage(spark, tmp_path):
     store.write(spark, "empty_stage", empty)
     got = store.read(spark, "empty_stage")
     assert got.count() == 0 and set(got.columns) == {"url", "text"}
+
+
+def test_checkpoint_reads_pin_the_manifest_schema_without_jobs(
+    spark, spark_jobs, corpus, tmp_path_factory
+):
+    """Every stage re-read, right after its write and on resume, uses the
+    manifest's schema: no inference job, and the same schema parquet
+    inference would give."""
+    pages_pd, _ = corpus
+    pages = spark.createDataFrame(pages_pd.head(120))
+    ckpt = tmp_path_factory.mktemp("ckpt_pinned")
+    store = ParquetCheckpointStore(str(ckpt), CFG.config_hash())
+    returned = []
+    get_or_compute = store.get_or_compute
+
+    def recording(spark, stage, compute):
+        df, res = get_or_compute(spark, stage, compute)
+        returned.append((stage, res.skipped, df))
+        return df, res
+
+    store.get_or_compute = recording
+    run_pipeline(spark, pages, CFG, store=store)
+    (_, report), resume_jobs = spark_jobs(
+        lambda: run_pipeline(spark, pages, CFG, store=store)
+    )
+    assert all(s.skipped for s in report.stages)
+    assert resume_jobs == 0
+    assert [(n, sk) for n, sk, _ in returned] == [
+        (s.name, skipped) for skipped in (False, True) for s in report.stages
+    ]
+    for stage, _, df in returned:
+        inferred = spark.read.parquet(str(ckpt / f"{stage}.parquet")).schema
+        assert df.schema == inferred, stage
+        read, jobs = spark_jobs(lambda: store.read(spark, stage))
+        assert jobs == 0, stage
+        assert read.schema == inferred, stage
+
+
+# Spark jobs of one warm checkpointed run over the 200-doc fixture: the
+# seven stage commits with the shuffle and broadcast jobs AQE runs under
+# them, the verify slice collect and the CC edge collect. A re-read that
+# infers its schema, or a count job spent on a bound the manifests hold,
+# pushes a run over it.
+PIPELINE_JOB_BUDGET = 17
+
+
+def test_checkpointed_run_stays_within_job_budget(
+    spark, spark_jobs, corpus, tmp_path_factory
+):
+    pages_pd, _ = corpus
+    pages = spark.createDataFrame(pages_pd.head(200))
+    run_pipeline(spark, pages, CFG, str(tmp_path_factory.mktemp("ckpt_budget_0")))
+    (_, report), jobs = spark_jobs(
+        lambda: run_pipeline(
+            spark, pages, CFG, str(tmp_path_factory.mktemp("ckpt_budget_1"))
+        )
+    )
+    assert not any(s.skipped for s in report.stages)
+    assert jobs <= PIPELINE_JOB_BUDGET, f"{jobs} Spark jobs > {PIPELINE_JOB_BUDGET}"
 
 
 def test_pipeline_skew_star_linking(spark, tmp_path_factory):

@@ -67,6 +67,19 @@ def test_empty_stage_roundtrips_schema(spark, tmp_path, store_cls):
     assert back.count() == 0 and back.columns == ["k"]
 
 
+def test_read_fails_on_missing_part_file(spark, tmp_path, store_cls):
+    """Reads use the manifest's schema, which would read a short snapshot
+    without complaint: a part file gone from a committed stage must raise
+    instead."""
+    store = store_cls(str(tmp_path / "ck"), "cfg1")
+    store.write(spark, "s1", spark.range(100).repartition(4))
+    parts = sorted((tmp_path / "ck").rglob("part-*.parquet"))
+    assert len(parts) == 4 and store.has("s1")
+    parts[0].unlink()
+    with pytest.raises(FileNotFoundError, match="part files"):
+        store.read(spark, "s1")
+
+
 def test_pipeline_resume_on_both_stores(spark, tmp_path, store_cls):
     """The full near-dup pipeline commits per stage and resumes with every
     stage skipped on a second run — on EVERY store backend."""
